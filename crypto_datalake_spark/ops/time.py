@@ -11,6 +11,8 @@ timezone involvement, bit-identical to DuckDB's naive-timestamp math.
 
 from __future__ import annotations
 
+import datetime as dt
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -98,6 +100,14 @@ def expected_minutes(bucket_start: Column, timeframe: str) -> Column:
     return F.timestamp_diff("MINUTE", bucket_start, end).cast("long")
 
 
+def _parse_ntz(ts: str) -> dt.datetime:
+    parsed = dt.datetime.fromisoformat(ts)
+    if parsed.tzinfo is not None:
+        raise ValueError(f"spine bound {ts!r} carries a UTC offset; "
+                         "TIMESTAMP_NTZ bounds must be naive")
+    return parsed
+
+
 def minute_spine(
     spark: SparkSession,
     start: str,
@@ -109,13 +119,18 @@ def minute_spine(
     Scale note: built from ``spark.range`` (distributed, partitioned by id
     ranges) rather than a driver-side ``sequence``+explode of one giant
     array, so a multi-year 1-minute spine parallelises across executors.
+
+    The slot count is driver arithmetic, no Spark job: the whole seconds
+    between the bounds (``timestampdiff(SECOND, …)``; a reversed range
+    gives an empty spine either way), ceil-divided by the step.  The
+    bounds must be naive ISO timestamps; anything
+    ``datetime.fromisoformat`` cannot parse, or a string carrying a UTC
+    offset, raises ``ValueError``.
     """
+    t0, t1 = _parse_ntz(start), _parse_ntz(end_exclusive)
     step = step_minutes * 60
-    n = spark.sql(
-        f"SELECT timestampdiff(SECOND, TIMESTAMP_NTZ '{start}', TIMESTAMP_NTZ '{end_exclusive}') AS s"
-    ).head()[0]
-    count = (int(n) + step - 1) // step
-    base = F.lit(start).cast("timestamp_ntz")
+    count = ((t1 - t0) // dt.timedelta(seconds=1) + step - 1) // step
+    base = F.lit(t0.isoformat(sep=" ")).cast("timestamp_ntz")
     return spark.range(count).select(
         F.timestamp_add("SECOND", (F.col("id") * step).cast("long"), base).alias("slot_ts")
     )

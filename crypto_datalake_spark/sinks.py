@@ -83,10 +83,11 @@ def _drop_emptied_partitions(
     Dynamic partition overwrite only replaces partitions present in the
     output frame — a partition with zero surviving rows is silently left
     stale on disk, so it must be dropped explicitly (Delta's MERGE does
-    the equivalent through the transaction log). ``out`` must be
-    persisted by the caller (it was just written, so this recompute is a
-    cache hit). Partition counts are repair-sized, so the collects are
-    tiny driver-side lists.
+    the equivalent through the transaction log). ``out`` must be the
+    caller's ``evaluate_once`` result, the frame it just wrote: a plain
+    or ``persist()``ed merge would be re-evaluated here against the
+    files the write just replaced. Partition counts are repair-sized, so
+    the collects are tiny driver-side lists.
 
     ``touched_vals`` holds partition values PRE-RENDERED by Spark's
     cast-to-string (the caller collects them that way), matching the
@@ -123,6 +124,21 @@ def _drop_emptied_partitions(
         p = jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}")
         fs = p.getFileSystem(conf)
         fs.delete(p, True)
+
+
+def evaluate_once(df: DataFrame) -> DataFrame:
+    """Evaluate a commit's output exactly once, for commits that write it
+    under the table it reads from and then derive more from it: ledger
+    entries, the present-partition set, stats, emptied partitions.
+
+    ``persist()`` does not survive that self-write: writing a path
+    re-caches every cached plan that reads the path, so the cached merge
+    is rebuilt from the just-written files on its next use.  That costs a
+    second full merge and, for a nondeterministic column, describes rows
+    that were never written.  A local checkpoint is an RDD no write can
+    invalidate, so the write and everything derived after it read the
+    same materialized rows."""
+    return df.localCheckpoint(eager=True)
 
 
 def _filter_to_partitions(
@@ -486,27 +502,31 @@ def upsert_partitioned(
         existing = _filter_to_partitions(existing, touched, partition_cols)
         existing = semi_join_null_safe(existing, touched, partition_cols)
     out = merge_frames(incoming, existing, keys, order_cols, preserve_cols, flag_cols)
-
     if ledger_path is not None:
-        out = out.persist()
-    try:
-        (
-            out.repartition(*[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_cols)
-            .parquet(path)
+        # the ledger describes exactly the rows written
+        out = evaluate_once(out)
+    _overwrite_partitions(out, path, partition_cols)
+    if ledger_path is not None:
+        entries = ledger_entries(
+            out, partition_cols, order_cols[0], digest_cols or keys
         )
-        if ledger_path is not None:
-            entries = ledger_entries(
-                out, partition_cols, order_cols[0], digest_cols or keys
-            )
-            upsert_ledger(
-                spark, ledger_path, entries, partition_cols, frame_schema_hash(out)
-            )
-    finally:
-        if ledger_path is not None:
-            out.unpersist()
+        upsert_ledger(
+            spark, ledger_path, entries, partition_cols, frame_schema_hash(out)
+        )
+
+
+def _overwrite_partitions(
+    df: DataFrame, path: str, partition_cols: Sequence[str]
+) -> None:
+    """Dynamic partition overwrite: replace exactly the partitions present
+    in ``df``, one file per partition directory."""
+    (
+        df.repartition(*[F.col(c) for c in partition_cols])
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def write_time_partitioned(
@@ -531,13 +551,7 @@ def write_time_partitioned(
     if granularity == "hour":
         out = out.withColumn("hour", F.hour(ts_col))
         parts.append("hour")
-    (
-        out.repartition(*[F.col(c) for c in parts])
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*parts)
-        .parquet(path)
-    )
+    _overwrite_partitions(out, path, parts)
     return parts
 
 
@@ -591,13 +605,7 @@ def merge_into(
     existing_full = _read_existing(spark, path, cols)
     if existing_full is None:  # first write: MERGE degenerates to insert
         if insert:
-            (
-                source.repartition(*[F.col(c) for c in partition_cols])
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*partition_cols)
-                .parquet(path)
-            )
+            _overwrite_partitions(source, path, partition_cols)
         return
 
     out, touched = merge_compute(
@@ -620,20 +628,11 @@ def merge_into(
             *[F.col(c).cast("string").alias(c) for c in partition_cols]
         ).collect()
     ]
-    out = out.persist()
-    try:
-        (
-            out.repartition(*[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-        # partitions whose rows ALL moved away / were deleted are not in
-        # the output, so dynamic overwrite never rewrites them — drop them
-        _drop_emptied_partitions(spark, path, touched_vals, out, partition_cols)
-    finally:
-        out.unpersist()
+    out = evaluate_once(out)
+    _overwrite_partitions(out, path, partition_cols)
+    # partitions whose rows ALL moved away / were deleted are not in
+    # the output, so dynamic overwrite never rewrites them — drop them
+    _drop_emptied_partitions(spark, path, touched_vals, out, partition_cols)
 
 
 def merge_compute(

@@ -638,19 +638,31 @@ def write_generation(
     table_path: str,
     partition_cols: Sequence[str],
     gid: str | None = None,
+    files_per_partition: int | None = None,
 ) -> str:
     """Append one immutable generation of data files; invisible to readers
-    until a manifest referencing ``gid`` is committed."""
+    until a manifest referencing ``gid`` is committed.
+
+    Layout: one file per partition directory, or the frame's own
+    partitioning for an unpartitioned table.  ``files_per_partition``
+    (compaction) caps every directory at that many files instead: a
+    partitioned write spreads each partition's rows over that many salt
+    values, which AQE may merge back for small partitions."""
     gid = gid or uuid.uuid4().hex[:12]
     tagged = df.withColumn(GEN_COL, F.lit(gid))
     if partition_cols:
+        by = [F.col(c) for c in partition_cols]
+        if files_per_partition and files_per_partition > 1:
+            by.append(F.pmod(F.monotonically_increasing_id(), F.lit(files_per_partition)))
         (
-            tagged.repartition(*[F.col(c) for c in partition_cols])
+            tagged.repartition(*by)
             .write.mode("append")
             .partitionBy(*partition_cols, GEN_COL)
             .parquet(table_path)
         )
     else:
+        if files_per_partition:
+            tagged = tagged.coalesce(files_per_partition)
         tagged.write.mode("append").partitionBy(GEN_COL).parquet(table_path)
     return gid
 
@@ -718,6 +730,7 @@ def atomic_upsert_partitioned(
     disappear, and untouched partitions keep their old mapping.
     """
     from crypto_datalake_spark.sinks import (
+        evaluate_once,
         frame_schema_hash,
         ledger_entries,
         merge_frames,
@@ -755,59 +768,59 @@ def atomic_upsert_partitioned(
     # an emptied-but-versioned table holds no data a narrowed schema
     # could hide, so the add-only guard applies only when rows exist
 
-    out = merge_frames(incoming, existing, keys, order_cols, preserve_cols, flag_cols)
-    out = out.persist()
-    try:
-        gid = write_generation(out, path, partition_cols)
-        extra: dict = {}
-        if stats_cols:
-            # the stats aggregate groups the SAME frame by the SAME
-            # rendered partition values — its keys ARE the present set,
-            # so the separate distinct-collect job is skipped
-            stats_new = partition_stats(spark, out, partition_cols, stats_cols)
-            present = set(stats_new)
-        else:
-            present = set(_partition_path_strings(spark, out, partition_cols))
-        parts = dict(manifest["partitions"]) if manifest else {}
-        for p in touched:
-            parts.pop(p, None)  # emptied partitions stay gone
-        for p in present:
-            parts[p] = gid
-        if stats_cols:
-            extra["stats"] = carry_forward_stats(
-                manifest, stats_new, touched | present, parts
-            )
-        else:
-            # stats_cols omitted on a table that already records stats
-            # must NOT publish a stats-less manifest (that silently
-            # disables data skipping table-wide): refresh the touched
-            # partitions over the same recorded columns and carry the
-            # rest forward, exactly like merge/purge/compaction do.
-            extra.update(
-                _refresh_stats_extra(
-                    spark, manifest, out, partition_cols, touched, parts
-                )
-            )
-        committed = commit_manifest(
-            spark,
-            path,
-            parts,
-            base_version=manifest["version"] if manifest else None,
-            schema_hash=frame_schema_hash(out),
-            table_schema=json.loads(out.schema.json()),
-            **extra,
+    # the manifest's present set and stats, and the ledger, all describe
+    # the one materialization that write_generation writes
+    out = evaluate_once(
+        merge_frames(incoming, existing, keys, order_cols, preserve_cols, flag_cols)
+    )
+    gid = write_generation(out, path, partition_cols)
+    extra: dict = {}
+    if stats_cols:
+        # the stats aggregate groups the SAME frame by the SAME
+        # rendered partition values — its keys ARE the present set,
+        # so the separate distinct-collect job is skipped
+        stats_new = partition_stats(spark, out, partition_cols, stats_cols)
+        present = set(stats_new)
+    else:
+        present = set(_partition_path_strings(spark, out, partition_cols))
+    parts = dict(manifest["partitions"]) if manifest else {}
+    for p in touched:
+        parts.pop(p, None)  # emptied partitions stay gone
+    for p in present:
+        parts[p] = gid
+    if stats_cols:
+        extra["stats"] = carry_forward_stats(
+            manifest, stats_new, touched | present, parts
         )
-
-        if ledger_path is not None:
-            entries = ledger_entries(
-                out, partition_cols, order_cols[0], digest_cols or keys
-            ).withColumn("generation", F.lit(gid))
-            upsert_ledger(
-                spark, ledger_path, entries, partition_cols, frame_schema_hash(out)
+    else:
+        # stats_cols omitted on a table that already records stats
+        # must NOT publish a stats-less manifest (that silently
+        # disables data skipping table-wide): refresh the touched
+        # partitions over the same recorded columns and carry the
+        # rest forward, exactly like merge/purge/compaction do.
+        extra.update(
+            _refresh_stats_extra(
+                spark, manifest, out, partition_cols, touched, parts
             )
-        return committed
-    finally:
-        out.unpersist()
+        )
+    committed = commit_manifest(
+        spark,
+        path,
+        parts,
+        base_version=manifest["version"] if manifest else None,
+        schema_hash=frame_schema_hash(out),
+        table_schema=json.loads(out.schema.json()),
+        **extra,
+    )
+
+    if ledger_path is not None:
+        entries = ledger_entries(
+            out, partition_cols, order_cols[0], digest_cols or keys
+        ).withColumn("generation", F.lit(gid))
+        upsert_ledger(
+            spark, ledger_path, entries, partition_cols, frame_schema_hash(out)
+        )
+    return committed
 
 
 def atomic_merge_into(
@@ -826,7 +839,7 @@ def atomic_merge_into(
     manifest in the same atomic swap — no post-write filesystem deletes,
     no window where a reader can see the stale partition.
     """
-    from crypto_datalake_spark.sinks import merge_compute
+    from crypto_datalake_spark.sinks import evaluate_once, merge_compute
 
     cols = source.columns
     manifest = current_manifest(spark, path)
@@ -851,28 +864,25 @@ def atomic_merge_into(
     out, touched = merge_compute(
         source, existing_full, on, partition_cols, **merge_kwargs
     )
-    out = out.persist()
-    try:
-        gid = write_generation(out, path, partition_cols)
-        touched_paths = set(_partition_path_strings(spark, touched, partition_cols))
-        present = set(_partition_path_strings(spark, out, partition_cols))
-        parts = dict(manifest["partitions"]) if manifest else {}
-        for p in touched_paths:
-            parts.pop(p, None)  # emptied/moved-away partitions vanish here
-        for p in present:
-            parts[p] = gid
-        return commit_manifest(
-            spark,
-            path,
-            parts,
-            base_version=base_version,
-            table_schema=json.loads(out.schema.json()),
-            **_refresh_stats_extra(
-                spark, manifest, out, partition_cols, touched_paths, parts
-            ),
-        )
-    finally:
-        out.unpersist()
+    out = evaluate_once(out)
+    gid = write_generation(out, path, partition_cols)
+    touched_paths = set(_partition_path_strings(spark, touched, partition_cols))
+    present = set(_partition_path_strings(spark, out, partition_cols))
+    parts = dict(manifest["partitions"]) if manifest else {}
+    for p in touched_paths:
+        parts.pop(p, None)  # emptied/moved-away partitions vanish here
+    for p in present:
+        parts[p] = gid
+    return commit_manifest(
+        spark,
+        path,
+        parts,
+        base_version=base_version,
+        table_schema=json.loads(out.schema.json()),
+        **_refresh_stats_extra(
+            spark, manifest, out, partition_cols, touched_paths, parts
+        ),
+    )
 
 
 def compact_partitions(
@@ -882,7 +892,7 @@ def compact_partitions(
     partition_paths: Sequence[str] | None = None,
 ) -> dict | None:
     """Small-file compaction: rewrite each partition's live generation into
-    ``target_files_per_partition`` files, committed atomically.
+    at most ``target_files_per_partition`` files, committed atomically.
 
     Continuous ingestion writes a few rows per tick; after a day a hot
     partition holds hundreds of tiny files and scan tasks go
@@ -906,24 +916,32 @@ def compact_partitions(
     if not todo:
         return manifest
 
-    gid = uuid.uuid4().hex[:12]
-    for ppath, old_gid in todo.items():
-        base = table_path if ppath == ROOT_PART else f"{table_path}/{ppath}"
-        df = (
-            spark.read.option("basePath", table_path)
-            .parquet(f"{base}/{GEN_COL}={old_gid}")
-            .drop(GEN_COL)
-        )
-        # partition-value columns live in the directory name, not the files
-        part_value_cols = [
-            seg.split("=", 1)[0] for seg in ppath.split("/") if "=" in seg
-        ]
-        (
-            df.drop(*part_value_cols)
-            .coalesce(target_files_per_partition)
-            .write.mode("append")
-            .parquet(f"{base}/{GEN_COL}={gid}")
-        )
+    # one read of every requested partition's live generation (recorded
+    # schema, no footer sampling) and one write of the new generation;
+    # every partition path of a table names the same columns
+    first = next(iter(todo))
+    partition_cols = (
+        [] if first == ROOT_PART else [seg.split("=", 1)[0] for seg in first.split("/")]
+    )
+    gid = write_generation(
+        _read_generation_dirs(spark, table_path, manifest, todo),
+        table_path,
+        partition_cols,
+        files_per_partition=target_files_per_partition,
+    )
+    if "table_schema" not in manifest:
+        # a pre-schema manifest reads partition values by type inference,
+        # which can re-render one ("01" -> 1 -> "1") under a directory the
+        # manifest does not name: refuse before publishing such a map
+        jvm, fs, _ = _fs(spark, table_path)
+        for p in todo:
+            base = table_path if p == ROOT_PART else f"{table_path}/{p}"
+            if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{base}/{GEN_COL}={gid}")):
+                raise ValueError(
+                    f"{table_path}: partition {p} did not round-trip through "
+                    "a pre-schema read; commit the table once (any upsert "
+                    "records its schema) before compacting it"
+                )
     parts = dict(manifest["partitions"])
     for p in todo:
         parts[p] = gid
@@ -1050,7 +1068,11 @@ def purge_rows(
     retention process owns vacuuming, and understand the purge is not
     complete until it runs.
     """
-    from crypto_datalake_spark.sinks import frame_schema_hash, semi_join_null_safe
+    from crypto_datalake_spark.sinks import (
+        evaluate_once,
+        frame_schema_hash,
+        semi_join_null_safe,
+    )
 
     manifest = current_manifest(spark, table_path)
     if manifest is None or not manifest["partitions"]:
@@ -1062,29 +1084,27 @@ def purge_rows(
     if not touched:
         return manifest  # nothing matches: no rewrite, history untouched
     touched_dirs = matches.select(*partition_cols).distinct()
-    keep = semi_join_null_safe(live, touched_dirs, partition_cols).where(~hit)
-    keep = keep.persist()
-    try:
-        gid = write_generation(keep, table_path, partition_cols)
-        present = set(_partition_path_strings(spark, keep, partition_cols))
-        parts = dict(manifest["partitions"])
-        for p in touched:
-            parts.pop(p, None)  # fully-purged partitions stay gone
-        for p in present:
-            parts[p] = gid
-        committed = commit_manifest(
-            spark,
-            table_path,
-            parts,
-            base_version=manifest["version"],
-            schema_hash=frame_schema_hash(keep),
-            table_schema=json.loads(keep.schema.json()),
-            **_refresh_stats_extra(
-                spark, manifest, keep, partition_cols, touched, parts
-            ),
-        )
-    finally:
-        keep.unpersist()
+    keep = evaluate_once(
+        semi_join_null_safe(live, touched_dirs, partition_cols).where(~hit)
+    )
+    gid = write_generation(keep, table_path, partition_cols)
+    present = set(_partition_path_strings(spark, keep, partition_cols))
+    parts = dict(manifest["partitions"])
+    for p in touched:
+        parts.pop(p, None)  # fully-purged partitions stay gone
+    for p in present:
+        parts[p] = gid
+    committed = commit_manifest(
+        spark,
+        table_path,
+        parts,
+        base_version=manifest["version"],
+        schema_hash=frame_schema_hash(keep),
+        table_schema=json.loads(keep.schema.json()),
+        **_refresh_stats_extra(
+            spark, manifest, keep, partition_cols, touched, parts
+        ),
+    )
     if vacuum_history:
         vacuum(spark, table_path, keep_manifests=1)
     return committed

@@ -175,6 +175,44 @@ def test_builder_ffill_respects_limit(spark):
     assert rows[_ts(1, hour=1)] is None      # row 61: beyond 60-row frame
 
 
+@pytest.mark.parametrize(
+    "start,end,step",
+    [
+        ("2024-01-01 00:00:00", "2024-01-08 00:00:00", 1),  # whole minutes
+        ("2024-01-01 00:00:00", "2024-01-01 00:10:30.5", 1),  # fractional end
+        ("2024-01-01 00:00:00.25", "2024-01-01 00:10:00", 1),  # fractional start
+        ("2024-01-01 00:00:00", "2024-01-01 03:07:00", 15),  # step does not divide
+        ("2024-01-01 01:00:00", "2024-01-01 00:00:00", 1),  # reversed: empty
+    ],
+)
+def test_minute_spine_count_matches_sql_timestampdiff(spark, start, end, step):
+    """The driver-side slot count equals the SQL count it replaced: whole
+    seconds by ``timestampdiff``, ceil-divided by the step."""
+    from crypto_datalake_spark.ops.time import minute_spine
+
+    secs = spark.sql(
+        f"SELECT timestampdiff(SECOND, TIMESTAMP_NTZ '{start}', "
+        f"TIMESTAMP_NTZ '{end}')"
+    ).head()[0]
+    want = max(0, (secs + step * 60 - 1) // (step * 60))
+    slots = [r["slot_ts"] for r in minute_spine(spark, start, end, step).collect()]
+    assert len(slots) == want
+    if want:
+        first = dt.datetime.fromisoformat(start)
+        assert slots[0] == first
+        assert slots[-1] == first + dt.timedelta(minutes=step * (want - 1))
+
+
+@pytest.mark.parametrize(
+    "bound", ["2024-1-1 00:00:00", "yesterday", "2024-01-01T00:00:00+02:00"]
+)
+def test_minute_spine_rejects_unparseable_bounds(spark, bound):
+    from crypto_datalake_spark.ops.time import minute_spine
+
+    with pytest.raises(ValueError):
+        minute_spine(spark, bound, "2024-01-02 00:00:00")
+
+
 # --- HTF aggregator --------------------------------------------------------
 
 def test_htf_ohlc_correctness(spark):

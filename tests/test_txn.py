@@ -280,6 +280,38 @@ def test_compact_partitions_atomic(spark, tmp_path):
     assert _snapshot(spark, path) == before
 
 
+def test_compact_honours_target_files_per_partition(spark, tmp_path):
+    """One-pass compaction caps every partition at
+    ``target_files_per_partition`` files and spreads rows over them: with
+    AQE's merging of small shuffle partitions off, a multi-row partition
+    gets more than one file (two salt values can hash to one writer, so
+    not every partition reaches the cap)."""
+    import glob
+
+    path = str(tmp_path / "lake")
+    txn.atomic_upsert_partitioned(
+        spark,
+        _df(spark, [(s, _T(i), float(i), d) for i in range(4)
+                    for s, d in (("A", "d1"), ("B", "d2"))]),
+        path, **KW,
+    )
+    before = _snapshot(spark, path)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        m = txn.compact_partitions(spark, path, target_files_per_partition=2)
+    finally:
+        spark.conf.set(key, prev)
+    assert _snapshot(spark, path) == before
+    files = {
+        p: len(glob.glob(f"{path}/{p}/{txn.GEN_COL}={g}/*.parquet"))
+        for p, g in m["partitions"].items()
+    }
+    assert set(files) == {"day=d1", "day=d2"}
+    assert max(files.values()) == 2 and min(files.values()) >= 1
+
+
 def test_concurrent_commit_detected(spark, tmp_path, monkeypatch):
     """Optimistic concurrency: a writer whose view went stale (another
     writer committed the same next version first) gets
