@@ -118,8 +118,10 @@ def serve_timeframe(
 
     ``load_table(tf)`` returns the canonical frame for a materialized
     timeframe (columns symbol/bucket_ts/... for HTF, the minute schema
-    for 1m) or None. ``end_time`` anchors the window (resolve it first
-    via `resolve_end_time`; omitted → the 1m lake's max timestamp). The
+    for 1m) or None; None for a table the plan reads raises the same
+    "unavailable" ValueError as an unavailable plan. ``end_time``
+    anchors the window (resolve it first via `resolve_end_time`;
+    omitted → the 1m lake's max timestamp). The
     coverage probe counts HTF bars INSIDE the anchored window
     ``(end − limit·tf, end]`` per symbol present in the 1m lake — so a
     lagging HTF table fails it even when it holds ``limit`` old bars
@@ -152,8 +154,19 @@ def serve_timeframe(
     plan = plan_timeframe_fetch(timeframe, materialized_tfs, config)
     if plan.mode == MODE_UNAVAILABLE:
         raise ValueError(f"timeframe {plan.timeframe} unavailable: {plan.notes}")
+
+    def source(tf):
+        # a planned source table not written yet makes the timeframe
+        # unavailable, like any other plan that cannot be served
+        df = load_table(tf)
+        if df is None:
+            raise ValueError(
+                f"timeframe {plan.timeframe} unavailable: ('{tf}_table_missing',)"
+            )
+        return df
+
     if plan.mode == MODE_DIRECT_1M:
-        return per_symbol_tail(clip(load_table("1m"), "timestamp"), "timestamp"), plan
+        return per_symbol_tail(clip(source("1m"), "timestamp"), "timestamp"), plan
 
     if plan.mode == MODE_DIRECT:
         base = load_table("1m")
@@ -164,7 +177,7 @@ def serve_timeframe(
             # probe was skipped
             import dataclasses
 
-            htf = clip(load_table(plan.timeframe), "bucket_ts")
+            htf = clip(source(plan.timeframe), "bucket_ts")
             plan = dataclasses.replace(
                 plan, notes=plan.notes + ("no_1m_lake_coverage_probe_skipped",)
             )
@@ -187,7 +200,7 @@ def serve_timeframe(
                 second=0,
                 microsecond=0,
             )
-        htf = clip(load_table(plan.timeframe), "bucket_ts")
+        htf = clip(source(plan.timeframe), "bucket_ts")
         tail = per_symbol_tail(htf, "bucket_ts").localCheckpoint()
         counts = tail.where(F.col("bucket_ts") > F.lit(window_start)).groupBy(
             "symbol"
@@ -214,7 +227,7 @@ def serve_timeframe(
         )
 
     bars = aggregate_canonical_frame(
-        clip(load_table("1m"), "timestamp"), plan.timeframe, limit=limit
+        clip(source("1m"), "timestamp"), plan.timeframe, limit=limit
     )
     return bars, plan
 
@@ -226,18 +239,19 @@ def latest_watermarks(spark, ledger_path: str, key_cols: Iterable[str]) -> DataF
     the watermark is a derived view rather than separately-written state
     that could drift from the data).
 
-    Reads through ``read_ledger`` (latest row per partition over the
-    append-only log) — superseded entries from earlier commits must not
-    contribute, or a repair that legitimately SHRANK a partition's max_ts
-    would leave the watermark stuck at the stale value."""
-    from pyspark.sql import functions as F
+    Only the latest row per partition counts (``read_ledger``):
+    superseded entries from earlier commits must not contribute, or a
+    repair that legitimately SHRANK a partition's max_ts would leave the
+    watermark stuck at the stale value.
 
-    from crypto_datalake_spark.sinks import read_ledger
+    The answer is a local-relation frame, so collecting it runs no Spark
+    job.  It comes from this process's ledger view (``sinks.upsert_ledger``
+    advances it on every commit) when the view matches the log's file
+    listing, and from a ledger scan, which seeds the view, otherwise."""
+    from crypto_datalake_spark.sinks import ledger_watermarks, local_frame
 
-    led = read_ledger(spark, ledger_path)
-    return led.where(F.col("status") == "COMMITTED").groupBy(
-        *key_cols
-    ).agg(F.max("max_ts").alias("watermark"))
+    schema, marks = ledger_watermarks(spark, ledger_path, list(key_cols))
+    return local_frame(spark, [(*k, w) for k, w in marks.items()], schema)
 
 
 def resolve_end_time(

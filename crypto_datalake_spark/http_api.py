@@ -260,16 +260,23 @@ class PerpetualDataService:
             }
 
     def _watermark(self, symbol: str):
+        from pyspark.errors import AnalysisException
         from pyspark.sql import functions as F
 
+        from crypto_datalake_spark.sinks import is_missing_target_error
+
         if self._ledger_path is not None:
-            wm = (
-                latest_watermarks(self._spark, self._ledger_path, ["symbol"])
-                .where(F.col("symbol") == symbol)
-                .agg(F.max("watermark"))
-                .collect()[0][0]
-            )
-            return wm
+            try:
+                # a local frame: collecting it runs no Spark job
+                marks = latest_watermarks(
+                    self._spark, self._ledger_path, ["symbol"]
+                ).collect()
+            except AnalysisException as e:
+                # a ledger not written yet holds no watermark
+                if is_missing_target_error(e):
+                    return None
+                raise
+            return next((r["watermark"] for r in marks if r["symbol"] == symbol), None)
         base = self._load_table("1m", symbol)
         if base is None:
             return None

@@ -20,11 +20,14 @@ purpose.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Sequence
+from dataclasses import dataclass, field
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from crypto_datalake_spark.ops.dedup import keep_last
 
@@ -127,18 +130,70 @@ def _drop_emptied_partitions(
 
 
 def evaluate_once(df: DataFrame) -> DataFrame:
-    """Evaluate a commit's output exactly once, for commits that write it
-    under the table it reads from and then derive more from it: ledger
-    entries, the present-partition set, stats, emptied partitions.
+    """Evaluate a frame exactly once.  Every commit path evaluates two
+    frames this way: its incoming batch, before the touched-partition
+    set is collected from it, and its merged output, before it is
+    written under the table it reads from and the ledger entries, the
+    present-partition set and the stats are derived from it.
 
-    ``persist()`` does not survive that self-write: writing a path
-    re-caches every cached plan that reads the path, so the cached merge
-    is rebuilt from the just-written files on its next use.  That costs a
-    second full merge and, for a nondeterministic column, describes rows
-    that were never written.  A local checkpoint is an RDD no write can
-    invalidate, so the write and everything derived after it read the
-    same materialized rows."""
+    A batch evaluated twice can disagree with itself: a partition value
+    drawn anew on each evaluation would prune the merge to one set of
+    partitions and write another, replacing committed partitions with
+    only the new rows.  ``persist()`` does not hold the output across
+    its self-write either: writing a path re-caches every cached plan
+    that reads the path, so the cached merge is rebuilt from the
+    just-written files on its next use.  A local checkpoint is an RDD no
+    write can invalidate, so every use reads the same materialized rows."""
     return df.localCheckpoint(eager=True)
+
+
+def local_frame(spark: SparkSession, rows: Sequence, schema: StructType) -> DataFrame:
+    """``rows`` (tuples or Rows in ``schema``'s column order) as a local
+    relation: the values live in the plan, so collecting, filtering or
+    broadcasting the frame runs no Spark job."""
+    import datetime as _dt
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import TimestampType
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = []
+    for i, f in enumerate(schema.fields):
+        vals = [r[i] for r in rows]
+        if isinstance(f.dataType, TimestampType):
+            # a collected TIMESTAMP is a naive datetime in this process's
+            # zone; arrow would read a naive value as UTC
+            vals = [
+                v if v is None else v.astimezone(_dt.timezone.utc) for v in vals
+            ]
+        columns.append(pa.array(vals, type=arrow_schema.field(i).type))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(columns, schema=arrow_schema), schema
+    )
+
+
+def partition_values(
+    df: DataFrame, partition_cols: Sequence[str]
+) -> tuple[DataFrame, list[tuple]]:
+    """The distinct partition values of ``df``, collected in one pass:
+    as a local frame of the values themselves (a pruning predicate or
+    semi-join side that re-runs nothing) and as tuples rendered by
+    Spark's cast-to-string, the spelling of the directories
+    ``partitionBy`` writes.  ``df`` must give the same rows on every
+    evaluation (an incoming batch: its ``evaluate_once`` result), so
+    both describe the rows the commit merges."""
+    n = len(partition_cols)
+    rendered = [
+        F.col(c).cast("string").alias(f"__s{i}") for i, c in enumerate(partition_cols)
+    ]
+    rows = df.select(*partition_cols, *rendered).distinct().collect()
+    values = local_frame(
+        df.sparkSession,
+        [tuple(r[:n]) for r in rows],
+        df.select(*partition_cols).schema,
+    )
+    return values, [tuple(r[n:]) for r in rows]
 
 
 def _filter_to_partitions(
@@ -179,9 +234,9 @@ def semi_join_null_safe(
     existing rows are invisible to the merge" — a repair into
     ``day=__HIVE_DEFAULT_PARTITION__`` would REPLACE the partition instead
     of merging with it.  ``eqNullSafe`` makes NULL partition values
-    first-class.
+    first-class.  ``vals`` is broadcast as given, so pass it distinct.
     """
-    tagged = vals.select(*[F.col(c).alias(f"__t_{c}") for c in cols]).distinct()
+    tagged = vals.select(*[F.col(c).alias(f"__t_{c}") for c in cols])
     cond = None
     for c in cols:
         eq = F.col(c).eqNullSafe(F.col(f"__t_{c}"))
@@ -264,6 +319,124 @@ _LEDGER_META = frozenset(
 )
 
 
+@dataclass(frozen=True)
+class _LedgerView:
+    """What this process knows of one ledger log, valid only while the
+    log holds exactly ``files`` ((name, length) of every file a read of
+    the log reads): its highest ``commit_seq`` (None until read) and the
+    ``latest_watermarks`` answers computed so far, keyed by key columns,
+    each an (answer schema, {key values: watermark}) pair."""
+
+    files: frozenset
+    max_seq: int | None = None
+    answers: dict = field(default_factory=dict)
+
+
+#: one view per ledger path.  Views are immutable and replaced whole
+#: under the lock; no Spark job runs while it is held.
+_VIEWS: dict[str, _LedgerView] = {}
+_VIEWS_LOCK = threading.Lock()
+
+
+def _log_files(spark: SparkSession, ledger_path: str) -> frozenset | None:
+    """(name, length) of every file a read of the ledger log reads, or
+    None when the log does not exist or holds a directory (which a read
+    would take for a partition), where no view applies."""
+    jvm = spark.sparkContext._jvm
+    root = jvm.org.apache.hadoop.fs.Path(ledger_path)
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return None
+    files = set()
+    for st in fs.listStatus(root):
+        name = st.getPath().getName()
+        if name.startswith(("_", ".")):  # hidden from readers too
+            continue
+        if not st.isFile():
+            return None
+        files.add((name, st.getLen()))
+    return frozenset(files)
+
+
+def _current_view(ledger_path: str, files: frozenset | None) -> _LedgerView | None:
+    with _VIEWS_LOCK:
+        view = _VIEWS.get(ledger_path)
+    if files is None or view is None or view.files != files:
+        return None
+    return view
+
+
+def _remember(
+    ledger_path: str, files: frozenset, max_seq: int | None = None, answers=None
+) -> None:
+    """Record what a scan of the log as listed in ``files`` found.  The
+    listing is taken before the scan, so a file landing in between makes
+    the view disagree with the next listing and be dropped."""
+    with _VIEWS_LOCK:
+        view = _VIEWS.get(ledger_path)
+        if view is None or view.files != files:
+            view = _LedgerView(files)
+        _VIEWS[ledger_path] = _LedgerView(
+            files,
+            view.max_seq if max_seq is None else max_seq,
+            {**view.answers, **(answers or {})},
+        )
+
+
+def _advanced_answer(answer, key_cols, rows, schema):
+    """A watermark answer after a commit of the entry ``rows``, or None
+    when the commit makes it unknowable.  A key whose new max is at or
+    above its cached watermark (or that had none) takes the new max:
+    every row the commit supersedes was at most the cached value.  A
+    lower new max may have superseded the very row that set the
+    watermark, so the answer is dropped and the next read scans."""
+    ans_schema, marks = answer
+    types = {f.name: f.dataType.simpleString() for f in schema.fields}
+    want = {f.name: f.dataType.simpleString() for f in ans_schema.fields}
+    if any(types.get(c) != want[c] for c in key_cols) or (
+        types.get("max_ts") != want["watermark"]
+    ):
+        return None
+    new: dict = {}
+    for r in rows:
+        k = tuple(r[c] for c in key_cols)
+        m, prev = r["max_ts"], new.get(k)
+        new[k] = m if prev is None or (m is not None and m > prev) else prev
+    marks = dict(marks)
+    for k, m in new.items():
+        if marks.get(k) is not None and (m is None or m < marks[k]):
+            return None
+        marks[k] = m
+    return ans_schema, marks
+
+
+def _advance_view(
+    spark: SparkSession,
+    ledger_path: str,
+    before: frozenset | None,
+    seq: int,
+    rows: list,
+    schema: StructType,
+) -> None:
+    """Advance the view past this process's own append of ``rows`` at
+    ``seq``, or drop it.  The append writes one file, so the log must
+    now hold the files listed ``before`` plus exactly one more; any
+    other listing means another writer touched the log."""
+    after = _log_files(spark, ledger_path)
+    before = before or frozenset()
+    with _VIEWS_LOCK:
+        view = _VIEWS.pop(ledger_path, None)
+        if after is None or not before <= after or len(after - before) != 1:
+            return
+        answers = {}
+        if view is not None and view.files == before:
+            for key_cols, answer in view.answers.items():
+                advanced = _advanced_answer(answer, key_cols, rows, schema)
+                if advanced is not None:
+                    answers[key_cols] = advanced
+        _VIEWS[ledger_path] = _LedgerView(after, seq, answers)
+
+
 def upsert_ledger(
     spark: SparkSession,
     ledger_path: str,
@@ -275,16 +448,19 @@ def upsert_ledger(
     46-136: one row per committed partition).
 
     The ledger is LOG-STRUCTURED: each commit appends only its own rows
-    tagged with a monotonically increasing ``commit_seq``; the only
-    read-back is the one-column max(seq) scan (see ``_next_commit_seq``),
-    so commit cost no longer scales with how many partitions the table
-    has ever committed (the old read-modify-REWRITE was O(total ledger)
-    data movement per write — a driver bottleneck at real partition
-    counts).  Readers
-    resolve the latest row per partition via ``read_ledger``; ``compact_
-    ledger`` folds the log down when it grows.  A repair rewrite appends a
-    newer row for the same partition, which supersedes the old one at read
-    time — same visible semantics as the previous in-place replace."""
+    tagged with a monotonically increasing ``commit_seq``, so commit cost
+    does not scale with how many partitions the table has ever
+    committed.  Readers resolve the latest row per partition via
+    ``read_ledger``; ``compact_ledger`` folds the log down when it grows.
+    A repair rewrite appends a newer row for the same partition, which
+    supersedes the old one at read time.
+
+    The entries are collected (one row per partition) and appended as
+    one file.  This process keeps a view of each ledger it writes: the
+    highest seq and the watermark answers (``latest_watermarks``),
+    valid only for an exact listing of the log's files.  The append
+    advances the view from the collected rows, so the next seq and an
+    unchanged watermark cost no scan."""
     import uuid
 
     # read_ledger infers the partition-identity columns as "everything
@@ -299,20 +475,27 @@ def upsert_ledger(
             "partition column(s); read_ledger could not tell them apart"
         )
 
+    rows = entries.collect()
+    before = _log_files(spark, ledger_path)
+    seq = _commit_seq(spark, ledger_path, before)
     # commit_token breaks commit_seq ties DETERMINISTICALLY: two writers
     # racing _next_commit_seq can stamp the same seq (read-max-then-+1 is
     # not atomic), and which of them "wins" keep-last must at least be
     # stable across re-reads — same-partition concurrent writes have no
     # defined order anyway, but a resolution that flips between reads
     # would surface as a flapping watermark.
-    entries = (
-        entries.withColumn("schema_hash", F.lit(schema_hash))
+    (
+        local_frame(spark, rows, entries.schema)
+        .withColumn("schema_hash", F.lit(schema_hash))
         .withColumn("status", F.lit("COMMITTED"))
         .withColumn("committed_at_utc", F.current_timestamp().cast("string"))
-        .withColumn("commit_seq", F.lit(_next_commit_seq(spark, ledger_path)))
+        .withColumn("commit_seq", F.lit(seq))
         .withColumn("commit_token", F.lit(uuid.uuid4().hex))
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(ledger_path)
     )
-    entries.write.mode("append").parquet(ledger_path)
+    _advance_view(spark, ledger_path, before, seq, rows, entries.schema)
 
 
 def _next_commit_seq(spark: SparkSession, ledger_path: str) -> int:
@@ -320,19 +503,25 @@ def _next_commit_seq(spark: SparkSession, ledger_path: str) -> int:
     wall clock.  Pure wall-clock seqs break keep-last resolution when NTP
     steps the clock backwards or two commits land in the same microsecond.
 
-    Cost: one single-COLUMN scan of the append log (parquet is v1 here,
-    so the max() does not push to footer stats) — O(log files) with a
-    small constant, bounded by ``compact_ledger``.  Only a genuinely
-    missing path falls back to the wall clock; any OTHER read failure
-    (corrupt file, permission, FS hiccup) must fail the commit loudly —
-    silently reverting to wall-clock seqs on a log whose max is ahead of
-    the clock would resurrect exactly the stale-watermark bug this
-    function exists to prevent."""
+    The max comes from this process's view of the ledger when the view
+    matches the log's current file listing (no Spark job), else from a
+    single-column scan of the append log, which then seeds the view."""
+    return _commit_seq(spark, ledger_path, _log_files(spark, ledger_path))
+
+
+def _commit_seq(spark: SparkSession, ledger_path: str, files: frozenset | None) -> int:
+    """``_next_commit_seq`` against the listing ``files``.  Only a
+    genuinely missing path falls back to the wall clock; any OTHER read
+    failure (corrupt file, permission, FS hiccup) must fail the commit
+    loudly — silently reverting to wall-clock seqs on a log whose max is
+    ahead of the clock would resurrect exactly the stale-watermark bug
+    this function exists to prevent."""
     import time
 
-    from pyspark.errors import AnalysisException
-
     wall = time.time_ns() // 1000
+    view = _current_view(ledger_path, files)
+    if view is not None and view.max_seq is not None:
+        return max(view.max_seq + 1, wall)
     try:
         led = spark.read.parquet(ledger_path)
     except AnalysisException as e:  # first commit: path does not exist yet
@@ -346,12 +535,22 @@ def _next_commit_seq(spark: SparkSession, ledger_path: str) -> int:
     if "commit_seq" not in led.columns:
         return wall
     prev = led.agg(F.max("commit_seq")).first()[0]
-    return wall if prev is None else max(prev + 1, wall)
+    if prev is None:
+        return wall
+    if files is not None:
+        _remember(ledger_path, files, max_seq=prev)
+    return max(prev + 1, wall)
 
 
 def read_ledger(spark: SparkSession, ledger_path: str) -> DataFrame:
     """Current ledger state: the latest committed row per partition key
-    (keep-last by ``commit_seq`` over the append-only log)."""
+    (keep-last by ``commit_seq`` over the append-only log).
+
+    This is a scan of the whole log.  ``latest_watermarks`` and the next
+    commit seq answer from this process's ledger view instead, and come
+    here only when the view does not match the log's file listing: on
+    first use, and after another writer or ``compact_ledger`` changed
+    the log."""
     # mergeSchema: appended commits may add audit columns over time (e.g.
     # `generation` once a table moves to the txn protocol); the log is
     # partition-count-sized so the footer merge is cheap
@@ -366,6 +565,30 @@ def read_ledger(spark: SparkSession, ledger_path: str) -> DataFrame:
         ["commit_token"] if "commit_token" in led.columns else []
     )
     return keep_last(led, key_cols, order)
+
+
+def ledger_watermarks(
+    spark: SparkSession, ledger_path: str, key_cols: Sequence[str]
+) -> tuple[StructType, dict]:
+    """``latest_watermarks``'s answer as (schema, {key values:
+    watermark}): from this process's ledger view when it matches the
+    log's file listing, else from a scan through ``read_ledger``, which
+    seeds the view."""
+    key = tuple(key_cols)
+    files = _log_files(spark, ledger_path)
+    view = _current_view(ledger_path, files)
+    if view is not None and key in view.answers:
+        return view.answers[key]
+    marks = (
+        read_ledger(spark, ledger_path)
+        .where(F.col("status") == "COMMITTED")
+        .groupBy(*key)
+        .agg(F.max("max_ts").alias("watermark"))
+    )
+    answer = (marks.schema, {tuple(r[:-1]): r[-1] for r in marks.collect()})
+    if files is not None:
+        _remember(ledger_path, files, answers={key: answer})
+    return answer
 
 
 def compact_ledger(spark: SparkSession, ledger_path: str) -> None:
@@ -491,7 +714,10 @@ def upsert_partitioned(
     cols = incoming.columns
     existing = _read_existing(spark, path, cols)
     if existing is not None:
-        touched = incoming.select(*partition_cols).distinct()
+        # the touched set, the pruning and the merge read one evaluation
+        # of the batch
+        incoming = evaluate_once(incoming)
+        touched, _ = partition_values(incoming, partition_cols)
         # pushable coarse filter FIRST: an eqNullSafe join condition is
         # excluded from both static partition pruning and dynamic
         # partition pruning, so the semi-join alone would list and scan
@@ -608,7 +834,7 @@ def merge_into(
             _overwrite_partitions(source, path, partition_cols)
         return
 
-    out, touched = merge_compute(
+    out, touched_vals = merge_compute(
         source,
         existing_full,
         on,
@@ -620,14 +846,6 @@ def merge_into(
         track_key_moves=track_key_moves,
     )
 
-    # rendered by Spark's cast-to-string so the emptied-partition delete
-    # below matches the directory names partitionBy actually wrote
-    touched_vals = [
-        tuple(r[c] for c in partition_cols)
-        for r in touched.select(
-            *[F.col(c).cast("string").alias(c) for c in partition_cols]
-        ).collect()
-    ]
     out = evaluate_once(out)
     _overwrite_partitions(out, path, partition_cols)
     # partitions whose rows ALL moved away / were deleted are not in
@@ -645,16 +863,21 @@ def merge_compute(
     delete_condition: Column | None = None,
     insert: bool = True,
     track_key_moves: bool = True,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, list[tuple]]:
     """The MERGE itself, independent of commit strategy: returns the merged
-    rows for the touched partitions and the touched-partition-values frame.
+    rows for the touched partitions and the touched partition values,
+    rendered by Spark's cast-to-string (the directory names).
     ``merge_into`` commits via dynamic partition overwrite;
-    ``txn.atomic_merge_into`` commits via the generation manifest."""
+    ``txn.atomic_merge_into`` commits via the generation manifest.
+
+    ``source`` is evaluated once: the touched set is collected from
+    that evaluation and the merge reads it too."""
     cols = source.columns
     keyset = set(on)
     if update_cols is None:
         update_cols = [c for c in cols if c not in keyset]
 
+    source = evaluate_once(source)
     touched = source.select(*partition_cols).distinct()
     if track_key_moves:
         # partitions where a source key's CURRENT row lives (may differ
@@ -668,6 +891,7 @@ def merge_compute(
             .distinct()
         )
         touched = touched.unionByName(moved).distinct()
+    touched, touched_vals = partition_values(touched, partition_cols)
     existing = semi_join_null_safe(existing_full, touched, partition_cols)
 
     # explicit presence markers: NULL merge keys on either side must not
@@ -704,7 +928,7 @@ def merge_compute(
             v = F.when(src_only, s_c).otherwise(t_c)
         out_cols.append(v.alias(c))
     out = j.select(*out_cols) if insert else j.where(~src_only).select(*out_cols)
-    return out, touched
+    return out, touched_vals
 
 
 def merge_scd2(

@@ -536,13 +536,53 @@ def _partition_path_strings(
     ``.500000``) — and a mis-rendered key maps a directory that does not
     exist (reads fail) or misses one that does (deleted rows resurrect
     through ``_drop_emptied_partitions``)."""
+    from crypto_datalake_spark.sinks import partition_values
+
+    rendered = partition_values(df, partition_cols)[1]
+    return sorted(_rendered_paths(spark, rendered, partition_cols))
+
+
+def _rendered_paths(
+    spark: SparkSession, rendered: list[tuple], partition_cols: Sequence[str]
+) -> set[str]:
+    """Hive-escaped relative partition paths of partition values already
+    rendered by Spark's cast-to-string (``sinks.partition_values``)."""
     esc = _hive_escaper(spark)
-    rendered = df.select(
-        *[F.col(c).cast("string").alias(c) for c in partition_cols]
-    ).distinct()
-    return [
-        _hive_partition_path(esc, r, partition_cols) for r in rendered.collect()
-    ]
+    return {
+        _hive_partition_path(esc, dict(zip(partition_cols, vals)), partition_cols)
+        for vals in rendered
+    }
+
+
+def _written_partitions(
+    spark: SparkSession,
+    table_path: str,
+    manifest: dict | None,
+    out: DataFrame,
+    partition_cols: Sequence[str],
+    touched: set[str],
+    gid: str,
+) -> set[str]:
+    """The partitions generation ``gid`` wrote rows to, for a commit whose
+    written rows all lie in ``touched``: a partitioned write creates a
+    partition's ``__gen=<gid>`` directory only when it holds rows, so one
+    existence check per touched partition stands in for a distinct
+    collect over the written frame.  A pre-schema manifest reads partition
+    values by type inference, which can re-render one ("01" -> 1 -> "1")
+    under a directory ``touched`` does not name; there the written
+    frame's own values are collected."""
+    if manifest is not None and "table_schema" not in manifest:
+        return set(_partition_path_strings(spark, out, partition_cols))
+    jvm, fs, _ = _fs(spark, table_path)
+    return {
+        p
+        for p in touched
+        if fs.exists(
+            jvm.org.apache.hadoop.fs.Path(
+                _partition_dirs(table_path, {"partitions": {p: gid}})[0]
+            )
+        )
+    }
 
 
 def _hive_escaper(spark: SparkSession):
@@ -734,6 +774,7 @@ def atomic_upsert_partitioned(
         frame_schema_hash,
         ledger_entries,
         merge_frames,
+        partition_values,
         upsert_ledger,
     )
 
@@ -741,8 +782,11 @@ def atomic_upsert_partitioned(
     if manifest is None:
         guard_unmanaged_data(spark, path)
     # the touched partition set, rendered once driver-side (reused for
-    # the manifest update below)
-    touched = set(_partition_path_strings(spark, incoming, partition_cols))
+    # the manifest update below) from the evaluation the merge reads
+    incoming = evaluate_once(incoming)
+    touched = _rendered_paths(
+        spark, partition_values(incoming, partition_cols)[1], partition_cols
+    )
     existing = None
     if manifest is not None and manifest["partitions"]:
         # read ONLY the touched partitions' live generations, resolved
@@ -782,7 +826,9 @@ def atomic_upsert_partitioned(
         stats_new = partition_stats(spark, out, partition_cols, stats_cols)
         present = set(stats_new)
     else:
-        present = set(_partition_path_strings(spark, out, partition_cols))
+        present = _written_partitions(
+            spark, path, manifest, out, partition_cols, touched, gid
+        )
     parts = dict(manifest["partitions"]) if manifest else {}
     for p in touched:
         parts.pop(p, None)  # emptied partitions stay gone
@@ -861,13 +907,15 @@ def atomic_merge_into(
         existing_full = _guard_and_align_evolution(
             manifest, source, read_table(spark, path)
         )
-    out, touched = merge_compute(
+    out, touched_vals = merge_compute(
         source, existing_full, on, partition_cols, **merge_kwargs
     )
     out = evaluate_once(out)
     gid = write_generation(out, path, partition_cols)
-    touched_paths = set(_partition_path_strings(spark, touched, partition_cols))
-    present = set(_partition_path_strings(spark, out, partition_cols))
+    touched_paths = _rendered_paths(spark, touched_vals, partition_cols)
+    present = _written_partitions(
+        spark, path, manifest, out, partition_cols, touched_paths, gid
+    )
     parts = dict(manifest["partitions"]) if manifest else {}
     for p in touched_paths:
         parts.pop(p, None)  # emptied/moved-away partitions vanish here
@@ -1071,6 +1119,7 @@ def purge_rows(
     from crypto_datalake_spark.sinks import (
         evaluate_once,
         frame_schema_hash,
+        partition_values,
         semi_join_null_safe,
     )
 
@@ -1079,16 +1128,17 @@ def purge_rows(
         return None
     live = read_table(spark, table_path)
     hit = F.coalesce(predicate, F.lit(False))
-    matches = live.where(hit)
-    touched = set(_partition_path_strings(spark, matches, partition_cols))
+    touched_dirs, rendered = partition_values(live.where(hit), partition_cols)
+    touched = _rendered_paths(spark, rendered, partition_cols)
     if not touched:
         return manifest  # nothing matches: no rewrite, history untouched
-    touched_dirs = matches.select(*partition_cols).distinct()
     keep = evaluate_once(
         semi_join_null_safe(live, touched_dirs, partition_cols).where(~hit)
     )
     gid = write_generation(keep, table_path, partition_cols)
-    present = set(_partition_path_strings(spark, keep, partition_cols))
+    present = _written_partitions(
+        spark, table_path, manifest, keep, partition_cols, touched, gid
+    )
     parts = dict(manifest["partitions"])
     for p in touched:
         parts.pop(p, None)  # fully-purged partitions stay gone

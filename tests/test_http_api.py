@@ -163,6 +163,28 @@ def test_unavailable_timeframe_is_per_tf_error(spark, api):
     assert out["timeframes"]["3m"]["plan"]["mode"] == MODE_DIRECT
 
 
+def test_ledger_not_written_yet_means_no_watermark(spark, api, tmp_path):
+    """A service built with a ledger path before the first ingest commit
+    serves requests without end_time: the missing ledger holds no
+    watermark, so the window ends at now."""
+    _, _, tables = api
+    svc = PerpetualDataService(
+        spark, tables, ledger_path=str(tmp_path / "ledger"),
+        now=lambda: dt.datetime(2024, 1, 1, 0, 12),
+    )
+    srv, _ = serve_background(svc)
+    try:
+        code, body = _get(
+            srv.server_address[1], "/perpetual-data?symbol=BTC&timeframes=1m=2"
+        )
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    assert code == 200
+    assert body["end_time_from_watermark"] is False
+    assert len(body["timeframes"]["1m"]["bars"]) == 2
+
+
 def test_service_rejects_bad_symbol_and_empty_spec(spark, api):
     svc, _, _ = api
     with pytest.raises(RequestError):

@@ -505,6 +505,17 @@ def test_serve_timeframe_htf_only_lake_skips_probe(spark):
     assert got == [dt.datetime(2024, 1, 1, 0, 6), dt.datetime(2024, 1, 1, 0, 9)]
 
 
+def test_serve_timeframe_unwritten_source_table_is_unavailable(spark):
+    """A planned source table that has not been written yet (its path is
+    missing, so load_table gives None) makes the timeframe unavailable,
+    the error every other unservable plan raises."""
+    load = _planner_lake(spark, n_minutes=12, htf_bars_kept=4)
+    no_1m = lambda tf: None if tf == "1m" else load(tf)  # noqa: E731
+    for tf in ("1m", "5m"):  # read directly / aggregated from 1m
+        with pytest.raises(ValueError, match="unavailable.*1m_table_missing"):
+            serve_timeframe(tf, 2, no_1m, {"1m", "3m"})
+
+
 def test_cache_stale_entry_does_not_inflate_end_time():
     """put() over an EXPIRED entry drops its rows — it must drop its
     end_time too, or a later get() serves an 'exact' window whose data
