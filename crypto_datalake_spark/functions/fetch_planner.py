@@ -123,22 +123,25 @@ def serve_timeframe(
     anchors the window (resolve it first via `resolve_end_time`;
     omitted → the 1m lake's max timestamp). The
     coverage probe counts HTF bars INSIDE the anchored window
-    ``(end − limit·tf, end]`` per symbol present in the 1m lake — so a
-    lagging HTF table fails it even when it holds ``limit`` old bars
-    (a bare per-symbol count would pass stale data), and a symbol
-    missing from the HTF table entirely forces the fallback too. The
-    probe is one bounded aggregate + one distinct, driver-side by
-    design: the reference makes the same anchored height check per
-    request. The tail is checkpointed so the probe and the returned
-    frame share one execution.
+    ``(end − limit·tf, end]`` per symbol present in the 1m lake at or
+    before ``end_time`` — so a lagging HTF table fails it even when it
+    holds ``limit`` old bars (a bare per-symbol count would pass stale
+    data), and a symbol missing from the HTF table entirely forces the
+    fallback too; the reference makes the same anchored height check
+    per request. The bounded tail (≤ ``limit`` bars per symbol) is
+    collected once and counted on the driver, beside one distinct over
+    the 1m symbols; a covered window comes back as a local-relation
+    frame of the collected rows, so collecting it runs no Spark job.
     """
     import datetime as _dt
+    from collections import Counter
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from crypto_datalake_spark.ops.time import TIMEFRAME_MINUTES
     from crypto_datalake_spark.pipelines.serving import aggregate_canonical_frame
+    from crypto_datalake_spark.sinks import local_frame
 
     def clip(df, ts_col):
         return df.where(F.col(ts_col) <= F.lit(end_time)) if end_time is not None else df
@@ -200,20 +203,14 @@ def serve_timeframe(
                 second=0,
                 microsecond=0,
             )
-        htf = clip(source(plan.timeframe), "bucket_ts")
-        tail = per_symbol_tail(htf, "bucket_ts").localCheckpoint()
-        counts = tail.where(F.col("bucket_ts") > F.lit(window_start)).groupBy(
-            "symbol"
-        ).agg(F.count(F.lit(1)).alias("n"))
-        short = (
-            clip(base, "timestamp")
-            .select("symbol")
-            .distinct()
-            .join(counts, "symbol", "left")
-            .where(F.coalesce(F.col("n"), F.lit(0)) < limit)
-        )
-        if short.isEmpty():
-            return tail, plan
+        tail = per_symbol_tail(clip(source(plan.timeframe), "bucket_ts"), "bucket_ts")
+        rows = tail.collect()
+        have = Counter(r["symbol"] for r in rows if r["bucket_ts"] > window_start)
+        present = clip(base, "timestamp").select("symbol").distinct().collect()
+        # every 1m symbol needs limit bars in the window; a NULL
+        # symbol is never covered
+        if all(s is not None and have[s] >= limit for (s,) in present):
+            return local_frame(tail.sparkSession, rows, tail.schema), plan
         # partial HTF window → 1m aggregation fallback (service.py:1596-1605)
         plan = FetchPlan(
             plan.timeframe,

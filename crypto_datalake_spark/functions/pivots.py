@@ -5,7 +5,9 @@ Reference (/root/reference/src/live_indicators/pivots.py:4-12):
   R1 = 2P − L_prev             S1 = 2P − H_prev
   R2 = P + (H_prev − L_prev)   S2 = P − (H_prev − L_prev)
 
-Pure column arithmetic over a lag — no UDF needed.
+Pure column arithmetic over a lag — no UDF needed.  ``pivot_levels``
+is the same arithmetic on one bar's Python floats, for the API's
+driver-side indicator paths.
 """
 
 from __future__ import annotations
@@ -36,3 +38,13 @@ def traditional_pivots(
         (p + (ph - pl)).alias("r2"),
         (p - (ph - pl)).alias("s2"),
     )
+
+
+def pivot_levels(high, low, close) -> tuple:
+    """(pivot, r1, s1, r2, s2) from one period's H/L/C, in the same
+    IEEE-754 operation order as :func:`traditional_pivots`; any None
+    input makes every level None, as a NULL does in the column form."""
+    if high is None or low is None or close is None:
+        return (None,) * 5
+    p = (high + low + close) / 3.0
+    return p, 2.0 * p - low, 2.0 * p - high, p + (high - low), p - (high - low)

@@ -25,16 +25,23 @@ Request flow (reference stage → engine component):
               single-flight in-flight dedup (service.py:348-550) →
               ``serving_cache.ServingCache``.
 
-Scale note: the HTTP layer is driver-side glue around bounded results
-(every response is ≤ limit bars per timeframe — the per-symbol tail and
-coverage probe inside ``serve_timeframe`` do the bounding IN the plan,
-so a request can never collect an unbounded frame to the driver).
+Scale note: the HTTP layer is driver-side glue around bounded results.
+Every response is ≤ limit bars per timeframe: the per-symbol tail inside
+``serve_timeframe`` does the bounding IN the plan, so a request never
+collects an unbounded frame to the driver, and the coverage probe counts
+that collected tail on the driver.  ``/indicators`` computes its EMAs
+and pivots on the driver over ≤ limit + warmup bars (≤ 2,000: limit and
+EMA length are both capped at ``MAX_LIMIT``).  A table's
+``spark.read.parquet`` frame is reused for as long as its file listing
+is unchanged, so only the first miss after a commit pays the read's
+schema-inference job.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 import threading
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict
@@ -71,6 +78,88 @@ def _jsonable(v):
     return v
 
 
+class _TableRead:
+    """One lake table's ``spark.read.parquet`` frame, reused while the
+    table's file listing — (path, length, modification time) of every
+    file under it, hidden ones included — is unchanged.  A read costs a
+    schema-inference job; any change to the listing reads again, and a
+    table not written yet is never cached.
+
+    A table on the local filesystem is listed with ``os.scandir``, which
+    takes under a millisecond where the Hadoop ``listFiles`` (block
+    locations, several py4j round trips per file) took 0.15–0.6 s for
+    an 18-file minute table on a 4-core host.  Any other filesystem is
+    listed through the Hadoop ``FileSystem``."""
+
+    def __init__(self, spark, path: str) -> None:
+        self._spark = spark
+        self._path = path
+        root = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+        self._fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        self._root = self._fs.makeQualified(root)
+        self._local = (
+            self._root.toUri().getPath() if self._fs.getScheme() == "file" else None
+        )
+        # (listing, frame); replaced whole, so a racing reader sees
+        # either pair, and a lost update costs one more read
+        self._cached: tuple[frozenset, object] | None = None
+
+    def frame(self):
+        """The table's frame, or None when it is not written yet."""
+        from pyspark.errors import AnalysisException
+
+        from crypto_datalake_spark.sinks import is_missing_target_error
+
+        # listed BEFORE the read: a write landing between the two leaves
+        # the frame newer than its listing, so the next call re-reads
+        listing = self._listing()
+        cached = self._cached
+        if listing is not None and cached is not None and cached[0] == listing:
+            return cached[1]
+        try:
+            df = self._spark.read.parquet(self._path)
+        except AnalysisException as e:
+            # ONLY a not-yet-written store reads as "table absent";
+            # transient storage errors / corrupt footers must fail the
+            # request, not silently degrade the plan (the corpus_ingest
+            # _read_store discipline)
+            if is_missing_target_error(e):
+                return None
+            raise
+        if listing is not None:
+            self._cached = (listing, df)
+        return df
+
+    def _listing(self) -> frozenset | None:
+        """The file listing, or None when there is none to key a read
+        on: the table does not exist, a local table is a single file,
+        or a file vanished while it was listed (a concurrent commit)."""
+        from py4j.protocol import Py4JJavaError
+
+        files = set()
+        try:
+            if self._local is not None:
+                dirs = [self._local]
+                while dirs:
+                    with os.scandir(dirs.pop()) as it:
+                        for e in it:
+                            if e.is_dir(follow_symlinks=False):
+                                dirs.append(e.path)
+                            else:
+                                st = e.stat()
+                                files.add((e.path, st.st_size, st.st_mtime_ns))
+            else:
+                it = self._fs.listFiles(self._root, True)
+                while it.hasNext():
+                    st = it.next()
+                    files.add(
+                        (st.getPath().toString(), st.getLen(), st.getModificationTime())
+                    )
+        except (OSError, Py4JJavaError):
+            return None
+        return frozenset(files)
+
+
 class RequestError(ValueError):
     """Client-side validation failure → HTTP 400 (the FastAPI 422/400
     analogue)."""
@@ -105,29 +194,18 @@ class PerpetualDataService:
         self._cache = cache if cache is not None else ServingCache()
         self._now = now
         self._tol = watermark_tolerance_minutes
+        self._reads = {tf: _TableRead(spark, p) for tf, p in self._tables.items()}
 
     # ------------------------------------------------------------ lake
 
     def _load_table(self, tf: str, symbol: str):
-        from pyspark.errors import AnalysisException
+        """The table's rows for ``symbol``, or None when the table is not
+        configured or not written yet."""
         from pyspark.sql import functions as F
 
-        from crypto_datalake_spark.sinks import is_missing_target_error
-
-        path = self._tables.get(tf)
-        if path is None:
-            return None
-        try:
-            df = self._spark.read.parquet(path)
-        except AnalysisException as e:
-            # ONLY a not-yet-written store reads as "table absent";
-            # transient storage errors / corrupt footers must fail the
-            # request, not silently degrade the plan (the corpus_ingest
-            # _read_store discipline)
-            if is_missing_target_error(e):
-                return None
-            raise
-        return df.where(F.col("symbol") == symbol)
+        read = self._reads.get(tf)
+        df = None if read is None else read.frame()
+        return None if df is None else df.where(F.col("symbol") == symbol)
 
     # ------------------------------------------------ cache semantics
 
@@ -369,9 +447,14 @@ class PerpetualDataService:
         served bars the data endpoint returns.  The window is extended
         by the EMA warmup (functions.ema.warmup_bars — U3 history
         sizing) so the first emitted bar already carries stable EMAs,
-        then tailed back to ``limit``."""
-        from crypto_datalake_spark.functions.ema import ema_by_group, warmup_bars
-        from crypto_datalake_spark.functions.pivots import traditional_pivots
+        then tailed back to ``limit``.  Both are computed on the driver
+        over the served bars, with the fold and arithmetic of the
+        registry's operators (``functions.ema.ema_by_group``,
+        ``functions.pivots.traditional_pivots``): the same keys, values
+        and NULL propagation, and no Spark job once the bars are
+        cached."""
+        from crypto_datalake_spark.functions.ema import _ema_series, warmup_bars
+        from crypto_datalake_spark.functions.pivots import pivot_levels
         from crypto_datalake_spark.functions.timeframes import (
             normalize_timeframe,
         )
@@ -427,41 +510,27 @@ class PerpetualDataService:
         if not dicts:
             return {**base, "bars": []}
         ts_col = "timestamp" if "timestamp" in dicts[0] else "bucket_ts"
-        # rebuild the (bounded: ≤ limit+warmup rows) bar spine as a
-        # frame so the EMA/pivot operators run their tested Spark form
+        # the ≤ limit+warmup bars are already on the driver: the EMA fold
+        # and the pivot arithmetic of ema_by_group / traditional_pivots
+        # run here on them, with no Spark job
         fnum = lambda v: None if v is None else float(v)  # noqa: E731
-        bars = self._spark.createDataFrame(
-            [
-                (
-                    d["symbol"],
-                    dt.datetime.fromisoformat(d[ts_col]),
-                    fnum(d["open"]), fnum(d["high"]),
-                    fnum(d["low"]), fnum(d["close"]),
-                )
-                for d in dicts
-            ],
-            f"symbol string, {ts_col} timestamp_ntz, open double, "
-            "high double, low double, close double",
-        )
-        out = bars.select("symbol", ts_col, "open", "high", "low", "close")
-        for n in lengths:
-            # ema_by_group projects to (group, order, value, ema): join
-            # each length's frame back onto the bar spine (bounded rows)
-            e = ema_by_group(
-                bars, "close", ts_col, ["symbol"], n, out_col=f"ema_{n}"
-            ).select("symbol", ts_col, f"ema_{n}")
-            out = out.join(e, ["symbol", ts_col], "left")
-        if pivots:
-            pv = traditional_pivots(
-                bars, order_col=ts_col, partition_cols=["symbol"]
-            )
-            out = out.join(pv, ["symbol", ts_col], "left")
-        rows = sorted(
-            ({k: _jsonable(v) for k, v in r.asDict().items()}
-             for r in out.collect()),
-            key=lambda d: d[ts_col],
-        )[-limit:]
-        return {**base, "bars": rows}
+        ohlc = [
+            {k: fnum(d[k]) for k in ("open", "high", "low", "close")}
+            for d in dicts
+        ]
+        emas = [_ema_series([b["close"] for b in ohlc], n) for n in lengths]
+        rows = []
+        for i, (d, b) in enumerate(zip(dicts, ohlc)):
+            row = {"symbol": d["symbol"], ts_col: d[ts_col], **b}
+            row.update((f"ema_{n}", e[i]) for n, e in zip(lengths, emas))
+            if pivots:
+                prev = ohlc[i - 1] if i else {}
+                row.update(zip(
+                    ("pivot", "r1", "s1", "r2", "s2"),
+                    pivot_levels(prev.get("high"), prev.get("low"), prev.get("close")),
+                ))
+            rows.append(row)
+        return {**base, "bars": rows[-limit:]}
 
 
     # -------------------------------------------- live indicators
@@ -485,6 +554,7 @@ class PerpetualDataService:
             _ema_series,
             warmup_bars,
         )
+        from crypto_datalake_spark.functions.pivots import pivot_levels
         from crypto_datalake_spark.functions.timeframes import (
             normalize_timeframe,
         )
@@ -565,7 +635,7 @@ class PerpetualDataService:
                 )
             bar = bars[-1]
             h, lo, c = (float(bar[k]) for k in ("high", "low", "close"))
-            p = (h + lo + c) / 3.0  # reference pivots.py:4-12
+            p, r1, s1, r2, s2 = pivot_levels(h, lo, c)
             ts_col = "timestamp" if "timestamp" in bar else "bucket_ts"
             return {
                 "type": "traditional",
@@ -579,10 +649,10 @@ class PerpetualDataService:
                 },
                 "metadata": plan_info,
                 "p": p,
-                "r1": 2.0 * p - lo,
-                "r2": p + (h - lo),
-                "s1": 2.0 * p - h,
-                "s2": p - (h - lo),
+                "r1": r1,
+                "r2": r2,
+                "s1": s1,
+                "s2": s2,
             }
 
         # both arms concurrently, like the reference's executor pair

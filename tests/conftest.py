@@ -25,21 +25,33 @@ def sf_dir():
     return SF_DIR
 
 
+def _group_job_ids(sc, action) -> list[int]:
+    """Ids of the Spark jobs ``action()`` runs in this thread, read from
+    the status tracker under a job group of its own."""
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture
 def jobs(spark):
-    """``jobs(action)``: how many Spark jobs ``action()`` runs, read from
-    the status tracker under a job group of its own."""
+    """``jobs(action)``: how many Spark jobs ``action()`` runs."""
+    return lambda action: len(_group_job_ids(spark.sparkContext, action))
+
+
+@pytest.fixture
+def job_names(spark):
+    """``job_names(action)``: the names (call sites, such as ``parquet at
+    …`` for a read's schema inference) of the Spark jobs ``action()``
+    runs."""
     sc = spark.sparkContext
-
-    def count(action) -> int:
-        group = f"jobs-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            action()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        # the tracker is fed by the asynchronous listener bus
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    return count
+    store = sc._jsc.sc().statusStore()
+    return lambda action: [
+        store.job(j).name() for j in _group_job_ids(sc, action)
+    ]

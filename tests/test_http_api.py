@@ -195,9 +195,11 @@ def test_service_rejects_bad_symbol_and_empty_spec(spark, api):
 
 def test_indicators_endpoint_ema_and_pivots(api):
     """The indicator route: TradingView SMA-seeded EMA over the served
-    bars plus traditional pivots — EMA values cross-checked against the
-    direct ema_by_group computation, pivots against hand math, warmup
-    extension tailed back to the requested limit."""
+    bars plus traditional pivots — the EMA and the pivots checked against
+    hand math, the warmup extension tailed back to the requested limit,
+    and bad lengths and timeframes rejected.  The value-for-value check
+    against the Spark operators is
+    ``test_indicators_match_spark_operators_with_a_null_close``."""
     _, port, _ = api
     code, body = _get(
         port,
@@ -599,3 +601,196 @@ def test_live_indicators_unavailable_tf_and_length_ceiling(spark, api):
     # health probes are untimed; API payloads embed the elapsed time
     _, health = _get(port, "/healthz")
     assert "response_time_secs" not in health
+
+
+# --- serving a miss: driver-side indicators, table reads, job budgets ---
+
+END = dt.datetime(2024, 1, 1, 0, 11)
+#: Spark jobs of a serving miss once its tables are read: the tail's
+#: window plus the coverage probe's distinct (direct), or the
+#: aggregate's two shuffles (aggregate); a table read adds one
+#: schema-inference job only after its file listing changed
+DIRECT_HTF_MISS_BUDGET = 4
+AGGREGATE_MISS_BUDGET = 3
+
+
+def _window(svc, tf, limit, end=END):
+    """One window through the serving cache, computed in this thread on
+    a miss (``fetch`` runs each timeframe on a pool thread, outside the
+    caller's job group)."""
+    from crypto_datalake_spark.http_api import _to_epoch
+
+    key = ("BTCUSDT", tf, limit)
+    return svc._cached_window("BTCUSDT", tf, limit, end, _to_epoch(end), key)
+
+
+def _spark_indicators(spark, dicts, lengths, limit):
+    """The indicator bars computed by the registry's Spark operators
+    (ema_by_group per length, traditional_pivots) over ``dicts``."""
+    from crypto_datalake_spark.functions.ema import ema_by_group
+    from crypto_datalake_spark.functions.pivots import traditional_pivots
+    from crypto_datalake_spark.http_api import _jsonable
+
+    ts = "timestamp" if "timestamp" in dicts[0] else "bucket_ts"
+    fnum = lambda v: None if v is None else float(v)  # noqa: E731
+    bars = spark.createDataFrame(
+        [
+            (d["symbol"], dt.datetime.fromisoformat(d[ts]),
+             *(fnum(d[c]) for c in ("open", "high", "low", "close")))
+            for d in dicts
+        ],
+        f"symbol string, {ts} timestamp_ntz, open double, high double, "
+        "low double, close double",
+    )
+    out = bars
+    for n in lengths:
+        e = ema_by_group(bars, "close", ts, ["symbol"], n, out_col=f"ema_{n}")
+        out = out.join(e.select("symbol", ts, f"ema_{n}"), ["symbol", ts], "left")
+    pv = traditional_pivots(bars, order_col=ts, partition_cols=["symbol"])
+    out = out.join(pv, ["symbol", ts], "left")
+    rows = sorted(
+        ({k: _jsonable(v) for k, v in r.asDict().items()} for r in out.collect()),
+        key=lambda d: d[ts],
+    )
+    return rows[-limit:]
+
+
+def test_indicators_match_spark_operators_with_a_null_close(spark, tmp_path, jobs):
+    """/indicators computes on the driver: its bars must equal what
+    ema_by_group and traditional_pivots return over the same served
+    bars, key for key and value for value, NULLs included (a null close
+    is skipped by the EMA and nulls the next bar's pivots).  Served
+    again from the cached window, it runs no Spark job."""
+    from tests.test_pipelines import _minute_frame, _minute_row, _ts
+
+    rows = [
+        _minute_row(
+            _ts(m % 60, hour=m // 60),
+            close=None if m == 105 else 100.0 + m * 1.37,
+            high=111.0 + m, low=89.0 - m / 2,
+        )
+        for m in range(120)
+    ]
+    _minute_frame(spark, rows).write.parquet(str(tmp_path / "m1"))
+    svc = PerpetualDataService(spark, {"1m": str(tmp_path / "m1")})
+    end = dt.datetime(2024, 1, 1, 1, 59)
+    call = lambda: svc.indicators(  # noqa: E731
+        "BTC", "1m", "3,9", limit=20, end_time=end.isoformat()
+    )
+    body = call()
+    assert len(body["bars"]) == 20
+    assert jobs(call) == 0
+    dicts, plan = _window(svc, "1m", 20 + body["warmup_bars"], end)
+    assert plan["cache"] == "exact"
+    want = _spark_indicators(spark, dicts, [3, 9], 20)
+    assert json.dumps(body["bars"]) == json.dumps(want)
+    # the null close and the bar after it are in the compared window
+    i = next(i for i, b in enumerate(body["bars"]) if b["close"] is None)
+    assert body["bars"][i + 1]["pivot"] is None
+    assert body["bars"][i + 1]["ema_3"] is not None
+
+
+def test_serving_miss_job_budgets(spark, api, jobs, job_names):
+    """Once a table is read, a direct-HTF miss runs ≤ 4 Spark jobs and
+    an aggregate miss ≤ 3, with no schema-inference (``parquet at``)
+    job: the read is reused while the table's file listing is
+    unchanged."""
+    _, _, tables = api
+    svc = PerpetualDataService(spark, tables)
+    _window(svc, "3m", 2)  # reads 1m and 3m
+    plans = []
+    n = jobs(lambda: plans.append(_window(svc, "3m", 3)[1]))
+    assert plans[0]["mode"] == MODE_DIRECT and plans[0]["cache"] == "miss"
+    assert n <= DIRECT_HTF_MISS_BUDGET, n
+    names = job_names(lambda: plans.append(_window(svc, "5m", 2)[1]))
+    assert plans[1]["mode"] == MODE_AGGREGATE and plans[1]["cache"] == "miss"
+    assert len(names) <= AGGREGATE_MISS_BUDGET, names
+    assert not [x for x in names if x.startswith("parquet at")], names
+
+
+def _cold_bars(spark, path, tf, limit, end):
+    """A cold-cache serve of one window over a fresh read of ``path``."""
+    from pyspark.sql import functions as F
+
+    from crypto_datalake_spark.functions.fetch_planner import serve_timeframe
+    from crypto_datalake_spark.http_api import _jsonable
+
+    def load(t):
+        return spark.read.parquet(path).where(F.col("symbol") == "BTCUSDT")
+
+    bars, plan = serve_timeframe(tf, limit, load, {"1m"}, end_time=end)
+    ts = "timestamp" if plan.mode == MODE_DIRECT_1M else "bucket_ts"
+    return sorted(
+        ({k: _jsonable(v) for k, v in r.asDict().items()} for r in bars.collect()),
+        key=lambda d: d[ts],
+    )
+
+
+def test_commit_between_misses_is_served(spark, tmp_path):
+    """A commit to a table between two misses changes its file listing:
+    the second miss reads the table again and serves the committed rows,
+    byte-equal to a cold serve_timeframe."""
+    from tests.test_pipelines import _minute_frame, _minute_row, _ts
+    from crypto_datalake_spark.sinks import upsert_partitioned
+
+    path = str(tmp_path / "m1")
+
+    def commit(rows):
+        upsert_partitioned(
+            spark, _minute_frame(spark, rows), path,
+            keys=["symbol", "timestamp"], order_cols=["timestamp"],
+            partition_cols=["symbol"],
+        )
+
+    commit([_minute_row(_ts(m), close=100.0 + m) for m in range(12)])
+    svc = PerpetualDataService(spark, {"1m": path})
+    first = svc.fetch("BTC", "1m=3,5m=2", end_time="2024-01-01T00:11:00")
+    assert first["timeframes"]["1m"]["bars"][-1]["close"] == 111.0
+    # rewrite minute 11 and add minutes 12-14
+    commit([_minute_row(_ts(m), close=200.0 + m) for m in range(11, 15)])
+    end = dt.datetime(2024, 1, 1, 0, 14)
+    second = svc.fetch("BTC", "1m=4,5m=3", end_time=end.isoformat())
+    for tf, limit in (("1m", 4), ("5m", 3)):
+        got = second["timeframes"][tf]
+        assert got["plan"]["cache"] == "miss"
+        assert json.dumps(got["bars"]) == json.dumps(
+            _cold_bars(spark, path, tf, limit, end)
+        )
+    assert [b["close"] for b in second["timeframes"]["1m"]["bars"]] == [
+        211.0, 212.0, 213.0, 214.0,
+    ]
+
+
+def test_table_written_after_a_request_is_served(spark, tmp_path):
+    """A table missing at the first request is not remembered as
+    missing: written before the second, it is served."""
+    from tests.test_pipelines import _minute_frame, _minute_row, _ts
+
+    path = str(tmp_path / "m1")
+    svc = PerpetualDataService(spark, {"1m": path})
+    out = svc.fetch("BTC", "1m=2", end_time="2024-01-01T00:05:00")
+    assert "1m_table_missing" in out["timeframes"]["1m"]["error"]
+    _minute_frame(
+        spark, [_minute_row(_ts(m), close=100.0 + m) for m in range(6)]
+    ).write.parquet(path)
+    out = svc.fetch("BTC", "1m=2", end_time="2024-01-01T00:05:00")
+    assert [b["close"] for b in out["timeframes"]["1m"]["bars"]] == [104.0, 105.0]
+
+
+def test_table_read_off_the_local_filesystem_relists_through_hadoop(spark, tmp_path):
+    """A table on any other filesystem is listed through the Hadoop
+    FileSystem: an unchanged table reuses its frame, and a commit
+    changes the listing, so the next frame reads the committed rows."""
+    from pyspark.sql import functions as F
+
+    from crypto_datalake_spark.http_api import _TableRead
+
+    path = str(tmp_path / "t")
+    rows = lambda n: spark.range(n).withColumn("symbol", F.lit("X"))  # noqa: E731
+    rows(3).write.parquet(path)
+    read = _TableRead(spark, path)
+    read._local = None  # list as a non-local filesystem is listed
+    first = read.frame()
+    assert read.frame() is first
+    rows(5).write.mode("append").parquet(path)
+    assert read.frame().count() == 8
